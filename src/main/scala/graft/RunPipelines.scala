@@ -31,7 +31,7 @@ object RunPipelines {
         val cfg = ActiveSamplingConfig(initSize = 100, iterations = iters)
         val (train, metrics) = ActiveSampling.run(spark, pool, scorer, cfg)
         train.write.mode("overwrite").parquet(s"$outDir/bdqa_train")
-        ActiveSampling.metricsDF(spark, metrics)
+        spark.createDataFrame(metrics)
           .write.mode("overwrite").parquet(s"$outDir/bdqa_metrics")
         metrics.foreach(m => println(
           f"iter ${m.iter}%2d  mse=${m.mse}%.6f  meanVar=${m.meanVar}%.6f  " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -121,11 +121,24 @@ object Kde {
     * `scipy.stats.gaussian_kde` defaults used by the reference
     * (`core/utils.py:110-117`), with the reference's fallback 1.0 when the
     * estimate is degenerate and floor 1e-8. Weighted case uses effective
-    * sample size neff = (sum w)^2 / sum w^2 as gaussian_kde does. */
-  def scottBandwidth(df: DataFrame, value: Column, weight: Column = lit(1.0)): Double = {
-    val r = df.select(
-      sum(weight).as("sw"), sum(weight * weight).as("sw2"),
-      sum(weight * value).as("swv"), sum(weight * value * value).as("swv2")).head()
+    * sample size neff = (sum w)^2 / sum w^2 as gaussian_kde does, over the
+    * rows [[fit]] bins. */
+  def scottBandwidth(df: DataFrame, value: Column, weight: Column = lit(1.0)): Double =
+    scott(stats(df, value, weight))
+
+  /** The rows every pass reads: a finite value with weight > 0. */
+  private def counted(v: Column, w: Column): Column =
+    v.isNotNull && !isnan(v) && abs(v) =!= lit(Double.PositiveInfinity) && w > 0
+
+  /** The four Scott sums, then min and max, over the [[counted]] rows. */
+  private def stats(df: DataFrame, value: Column, weight: Column): Row = {
+    val (v, w) = (value.cast("double"), weight.cast("double"))
+    df.filter(counted(v, w))
+      .select(sum(w), sum(w * w), sum(w * v), sum(w * v * v), min(v), max(v)).head()
+  }
+
+  private def scott(r: Row): Double = {
+    if (r.isNullAt(0)) return 1.0
     val sw = r.getDouble(0); val sw2 = r.getDouble(1)
     if (sw <= 0 || sw2 <= 0) return 1.0
     val mean = r.getDouble(2) / sw
@@ -137,9 +150,9 @@ object Kde {
 
   /** Fit a weighted KDE over `value`, returning the grid + density.
     * Two passes: a tiny stats aggregate for bandwidth/grid bounds, then one
-    * binning pass. `bandwidth=None` → Scott's rule; `bounds=None` →
-    * [min - 3bw, max + 3bw] (the auto-grid padding the reference inherits
-    * from FFTKDE).
+    * binning pass, both over rows with a finite value and weight > 0.
+    * `bandwidth=None` → Scott's rule; `bounds=None` → [min - 3bw, max + 3bw]
+    * (the auto-grid padding the reference inherits from FFTKDE).
     *
     * Default method is BINNED (linear binning to the grid + driver-side
     * kernel convolution over ≤ gridSize bins) — the same
@@ -151,10 +164,11 @@ object Kde {
           gridSize: Int = 1024, bandwidth: Option[Double] = None,
           bounds: Option[(Double, Double)] = None,
           exact: Boolean = false): KdeResult = {
-    val bw = bandwidth.getOrElse(scottBandwidth(df, value, weight))
+    lazy val r = stats(df, value, weight)
+    val bw = bandwidth.getOrElse(scott(r))
     val (lo, hi) = bounds.getOrElse {
-      val r = df.select(min(value), max(value)).head()
-      (r.getDouble(0) - 3 * bw, r.getDouble(1) + 3 * bw)
+      require(!r.isNullAt(4), "Kde.fit: no finite value with positive weight")
+      (r.getDouble(4) - 3 * bw, r.getDouble(5) + 3 * bw)
     }
     if (exact) {
       val agg = new KdeAggregator(lo, hi, gridSize, bw)
@@ -180,8 +194,7 @@ object Kde {
     val i0 = least(greatest(floor(pos).cast("int"), lit(0)), lit(gridSize - 1))
     val frac = least(greatest(pos - i0.cast("double"), lit(0.0)), lit(1.0))
     val pairs = df
-      .filter(v.isNotNull && !isnan(v) && w > 0)
-      .filter(v >= lit(lo) && v <= lit(hi))
+      .filter(counted(v, w) && v >= lit(lo) && v <= lit(hi))
       .select(explode(array(
         struct(i0.as("bin"), (w * (lit(1.0) - frac)).as("bw")),
         struct(least(i0 + 1, lit(gridSize - 1)).as("bin"), (w * frac).as("bw")))).as("p"))

@@ -175,17 +175,10 @@ object Selection {
   def dedup(df: DataFrame, cols: Seq[String] = Nil): DataFrame =
     if (cols.isEmpty) df.dropDuplicates() else df.dropDuplicates(cols)
 
-  /** Seeded random permutation — `np.random.permutation`
-    * (`SDE_forecast_ActiveSampling.py:146-149`). NOTE the scale cost:
-    * `orderBy` is a global range sort, and its RangePartitioner first
-    * SAMPLES the rand keys — an extra scan of the input before the sort
-    * pass, and `rand` makes retried tasks non-reproducible. Prefer
-    * [[shuffleByKey]] wherever a row key exists. */
-  def shuffle(df: DataFrame, seed: Long): DataFrame = df.orderBy(rand(seed))
-
-  /** Deterministic permutation by hashed key — the reproducible form of
-    * [[shuffle]]: each row's position is the engine-portable md5 uniform of
-    * (key, salt), so the resulting ORDER is a pure function of the data —
+  /** Deterministic permutation by hashed key — `np.random.permutation`
+    * (`SDE_forecast_ActiveSampling.py:146-149`) without `rand`: each row's
+    * position is the engine-portable md5 uniform of (key, salt), so the
+    * resulting ORDER is a pure function of the data —
     * independent of partition count/AQE, identical across re-runs and task
     * retries, and replayable by a SQL engine (`ORDER BY` the same md5
     * construction). Different salts give independent permutations; `key`

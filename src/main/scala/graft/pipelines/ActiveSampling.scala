@@ -1,8 +1,8 @@
 package graft.pipelines
 
 import graft.functions.Pdfs
-import graft.ml.{Scorer, ScorerModel}
-import graft.operators.{Integrate, Kde, Selection}
+import graft.ml.{Acquisition, Scorer, ScorerModel}
+import graft.operators.{Kde, KdeResult, Selection}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,6 @@ case class ActiveSamplingConfig(
     seed: Long = 42,
     kdeGridSize: Int = 1024,
     kdeBandwidth: Option[Double] = None,
-    logPdfClip: Double = -6.0,
-    checkpointEvery: Int = 5,
     /** Oracle-parity init sampling: the Efraimidis–Spirakis uniform comes
       * from the 52-bit md5 of `id` (the q26/q54 device) instead of
       * `rand(seed)`, with an id tie-break — every init pick becomes a pure
@@ -37,49 +35,46 @@ case class ActiveSamplingConfig(
   * top-1 select-and-moves over the SAME cached scored pool (one scan powers
   * all three — the fusion the reference does by reusing arrays), then refit.
   *
-  * Scale notes: the scored pool is cached per iteration and localCheckpointed
-  * every `checkpointEvery` iterations to cut union+anti-join lineage growth
-  * (SURVEY.md §7 risk list); every selection is TakeOrderedAndProject + a
-  * broadcast anti-join, so iteration cost is O(one pool scan).
+  * Scale notes: the pool is a broadcast anti-join over the caller's `df`,
+  * never a copy. Pinned: the init train set; the scored pool, per
+  * iteration; each explorer's pick ([[Selection.selectAndMove]]); pool and
+  * train every 5th iteration, against union+anti-join lineage growth
+  * (SURVEY.md §7). Each selection is TakeOrderedAndProject + a broadcast
+  * anti-join, so iteration cost is O(one pool scan).
   */
 object ActiveSampling {
 
-  /** df must carry: id (long, unique), feature columns, y (double). */
+  private val LogPdfClip = -6.0   // the reference's log-density floor (:213-214)
+  private val CheckpointEvery = 5 // iterations between pool/train pins
+
+  /** df must carry: id (long, unique), feature columns, y (double). `run`
+    * does not copy df, yet reads it several times before the pool's first
+    * pin (the y-KDE, the init sample, then every pool scan until the 5th
+    * iteration), so pin an input that is expensive or nondeterministic to
+    * recompute. */
   def run(spark: SparkSession, df: DataFrame, scorer: Scorer,
           cfg: ActiveSamplingConfig = ActiveSamplingConfig()): (DataFrame, Seq[IterationMetrics]) = {
-    import spark.implicits._
-
-    val pool0 = df.localCheckpoint()
-
     // stage 1-2: KDE density profile of y → inverse-density weighted init
-    // sample (reference :34-56)
-    val yKde = Kde.fit(pool0, col("y"), gridSize = cfg.kdeGridSize,
-      bandwidth = cfg.kdeBandwidth)
-    val init0 =
+    // sample (reference :34-56); also the log-pdf error's true density
+    val yKde = Kde.fit(df, col("y"), gridSize = cfg.kdeGridSize, bandwidth = cfg.kdeBandwidth)
+    val init =
       if (cfg.portableInitSample) {
         // E-S key in the log form: u^(1/w) desc ⇔ ln(u)·(1/w) desc, and
         // 1/w = the clamped density — ln avoids pow underflow (q26 lesson)
         val u = graft.functions.TextOps.portableUniform52(col("id").cast("string"))
-        pool0
-          .withColumn("__es",
-            log(u) * greatest(yKde.interpolate(col("y")), lit(1e-12)))
+        df.withColumn("__es", log(u) * greatest(yKde.interpolate(col("y")), lit(1e-12)))
           .orderBy(desc("__es"), col("id"))
           .limit(cfg.initSize)
           .drop("__es")
       } else {
-        val weighted = pool0.withColumn("__w",
+        val weighted = df.withColumn("__w",
           lit(1.0) / greatest(yKde.interpolate(col("y")), lit(1e-12)))
         Selection.weightedSample(weighted, col("__w"), cfg.initSize, cfg.seed)
           .drop("__w")
       }
-    val init = init0.withColumn("explorer", lit("init"))
-
-    var train = init.localCheckpoint()
-    var pool = Selection.removeById(pool0, train, "id").localCheckpoint()
+    var train = init.withColumn("explorer", lit("init")).localCheckpoint()
+    var pool = Selection.removeById(df, train, "id")
     var model: ScorerModel = scorer.fit(train)
-
-    // the true-density grid for the log-pdf-error metric (reference :199-219)
-    val trueKde = yKde
 
     val metrics = (1 to cfg.iterations).map { it =>
       val scored = model.score(pool).cache()
@@ -90,30 +85,20 @@ object ActiveSampling {
         avg(col("var")).as("mvar")).head()
       val predKde = Kde.fit(scored, col("pred"), gridSize = cfg.kdeGridSize,
         bandwidth = cfg.kdeBandwidth,
-        bounds = Some((trueKde.gridMin, trueKde.gridMax)))
-      val gridDf = trueKde.toDF(spark).withColumnRenamed("pdf", "p_true")
-        .withColumn("p_pred", predKde.interpolate(col("grid_x")))
-      val logDiff = gridDf.select(col("grid_x"),
-        abs(Pdfs.clipLower(log(greatest(col("p_pred"), lit(1e-300))), cfg.logPdfClip) -
-            Pdfs.clipLower(log(greatest(col("p_true"), lit(1e-300))), cfg.logPdfClip)).as("d"))
-        .filter(Pdfs.isFinite(col("d")))
-      val logPdfErr = Integrate.trapz(logDiff, col("grid_x"), col("d"))
-        .head().getDouble(0)
+        bounds = Some((yKde.gridMin, yKde.gridMax)))
+      val logPdfErr = logPdfError(yKde, predKde)
 
       // 4b-4d: three explorers off the same scored scan (reference :222-269)
-      val usLwScore = (lit(1.0) / greatest(predKde.interpolate(col("pred")), lit(1e-12))) * col("var")
-      val (p1, t1, _) = Selection.selectAndMove(scored, train,
-        pow(col("pred") - col("y"), 2), 1, "id", "se", Seq(col("id")))
-      val (p2, t2, _) = Selection.selectAndMove(p1, t1, col("var"), 1, "id", "us", Seq(col("id")))
-      val (p3, t3, _) = Selection.selectAndMove(p2, t2, usLwScore, 1, "id", "us_lw", Seq(col("id")))
-
-      val dropCols = Seq("pred", "var")
-      pool = p3.drop(dropCols: _*)
-      train = t3.drop(dropCols: _*)
-      if (it % cfg.checkpointEvery == 0) {
-        pool = pool.localCheckpoint()
-        train = train.localCheckpoint()
+      val explorers = Seq("se" -> pow(col("pred") - col("y"), 2),
+        "us" -> Acquisition.us, "us_lw" -> Acquisition.usLw(predKde))
+      val (p3, t3) = explorers.foldLeft((scored, train)) { case ((p, t), (name, score)) =>
+        val (p2, t2, _) = Selection.selectAndMove(p, t, score, 1, "id", name, Seq(col("id")))
+        (p2, t2)
       }
+
+      val pin = (d: DataFrame) => if (it % CheckpointEvery == 0) d.localCheckpoint() else d
+      pool = pin(p3.drop("pred", "var"))
+      train = pin(t3.drop("pred", "var"))
       scored.unpersist()
 
       // 4e: refit on the grown train set (reference :271-273)
@@ -126,11 +111,19 @@ object ActiveSampling {
     (train, metrics)
   }
 
-  /** Metrics as a DataFrame (the reference's convergence-curve output,
-    * S7 sink replacement). */
-  def metricsDF(spark: SparkSession, ms: Seq[IterationMetrics]): DataFrame = {
-    import spark.implicits._
-    ms.toDF()
+  /** Trapezoid ∫ |log p_pred − log p_true| dx over the true grid (reference
+    * :199-219): each density floors at 1e-300 before `StrictMath.log` (as
+    * Spark's `log`) and clips at −6; non-finite points drop before
+    * neighbours pair; segments sum in ascending grid order from 0.0. */
+  private[pipelines] def logPdfError(trueKde: KdeResult, predKde: KdeResult): Double = {
+    def logClip(p: Double) = math.max(LogPdfClip, StrictMath.log(math.max(p, 1e-300)))
+    val xs = trueKde.gridX
+    val pts = xs.indices.map(i => (xs(i),
+        math.abs(logClip(predKde.interpolateValue(xs(i))) - logClip(trueKde.pdf(i)))))
+      .filter { case (_, d) => !d.isNaN && !d.isInfinite }
+    pts.zip(pts.drop(1)).foldLeft(0.0) { case (s, ((x0, d0), (x1, d1))) =>
+      s + (d1 + d0) / 2.0 * (x1 - x0)
+    }
   }
 
   /** Deterministic flagship-loop trace (the q54 oracle gate): runs the REAL

@@ -86,7 +86,10 @@ object SdeForecast {
     * models — the multi-output head of the reference's hist(10) → target(5)
     * LSTM (`SDE_forecast_ActiveSampling.py:57-71`) — and ranks pool windows
     * by the SUMMED per-horizon L1 error (`SDE:220`). All horizon models
-    * score in one chained projection pass over the pool (a single scan). */
+    * score in one chained projection pass over the pool (a single scan).
+    * Pinned: the windows and the init train set, once; pool and train after
+    * each iteration. The pool is never copied at init: until iteration 1's
+    * pin it is a broadcast anti-join of the init ids over the windows. */
   def run(spark: SparkSession, scorerFor: String => Scorer, n: Int = 1000,
           history: Int = 10, pred: Int = 5, nModes: Int = 5,
           initK: Int = 100, iterations: Int = 5, batch: Int = 20,
@@ -99,17 +102,12 @@ object SdeForecast {
     val coeffs = podCoefficients(windows, nModes)
     var train = initSample(windows, coeffs, nModes, initK, seed)
       .withColumn("explorer", lit("init")).localCheckpoint()
-    var pool = Selection.removeById(windows, train, "win_id").localCheckpoint()
+    var pool = Selection.removeById(windows, train, "win_id")
 
     // flatten hist features + ALL pred-horizon labels (y0..y{pred-1})
-    val flat = (df: DataFrame) => {
-      val withH = (0 until history).foldLeft(df) { (d, i) =>
-        d.withColumn(s"h$i", col("hist").getItem(i))
-      }
-      (0 until pred).foldLeft(withH) { (d, h) =>
-        d.withColumn(s"y$h", col("target").getItem(h))
-      }
-    }
+    val flat = (df: DataFrame) => df.select(col("*") +:
+      ((0 until history).map(i => col("hist").getItem(i).as(s"h$i")) ++
+        (0 until pred).map(h => col("target").getItem(h).as(s"y$h"))): _*)
 
     val iters = (1 to iterations).map { it =>
       val ft = flat(train)

@@ -1431,7 +1431,7 @@ object Queries {
     val (_, ms) = ActiveSampling.run(s, pool, scorer, ActiveSamplingConfig(
       initSize = 100, iterations = 3, kdeGridSize = 256,
       kdeBandwidth = Some(0.2), portableInitSample = true))
-    ActiveSampling.metricsDF(s, ms).select(
+    s.createDataFrame(ms).select(
       col("iter").cast("long").as("iter"),
       round(col("mse"), 6).as("mse"),
       round(col("meanVar"), 6).as("mvar"),

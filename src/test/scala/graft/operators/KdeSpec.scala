@@ -68,6 +68,32 @@ class KdeSpec extends SparkSpec {
     assert(math.abs(bw - sd * math.pow(n, -0.2)) < 1e-9)
   }
 
+  private def assertSameKde(a: KdeResult, b: KdeResult): Unit = {
+    assert((a.gridMin, a.gridMax, a.gridSize, a.bandwidth) ==
+      (b.gridMin, b.gridMax, b.gridSize, b.bandwidth))
+    assert(a.pdf.sameElements(b.pdf))
+  }
+
+  test("default bandwidth and bounds are Scott's rule and min/max -/+ 3bw, bit for bit") {
+    val rnd = new scala.util.Random(11)
+    val df = Seq.fill(2000)(rnd.nextGaussian() * 1.5 - 0.5).toDF("v")
+    val bw = Kde.scottBandwidth(df, col("v"))
+    val r = df.agg(min("v"), max("v")).head()
+    val given = Kde.fit(df, col("v"), gridSize = 256, bandwidth = Some(bw),
+      bounds = Some((r.getDouble(0) - 3 * bw, r.getDouble(1) + 3 * bw)))
+    assertSameKde(Kde.fit(df, col("v"), gridSize = 256), given)
+  }
+
+  test("NaN and infinite values are ignored by the bandwidth, bounds and density") {
+    // dyadic values: every sum is exact, whatever the partitioning
+    val clean = Seq(-0.5, 0.0, 0.25, 0.5, 1.0, 1.5, 2.0)
+    val dirty = (clean :+ Double.NaN :+ Double.PositiveInfinity).toDF("v")
+    val want = Kde.fit(clean.toDF("v"), col("v"), gridSize = 256)
+    assert(!want.gridMax.isNaN && want.bandwidth != 1.0)
+    assertSameKde(Kde.fit(dirty, col("v"), gridSize = 256), want)
+    assert(Kde.scottBandwidth(dirty, col("v")) == want.bandwidth)
+  }
+
   test("weighted KDE shifts mass toward weighted points") {
     val df = (Seq.fill(100)((0.0, 1.0)) ++ Seq.fill(100)((1.0, 3.0))).toDF("v", "w")
     val r = Kde.fit(df, col("v"), col("w"), gridSize = 201, bandwidth = Some(0.1),

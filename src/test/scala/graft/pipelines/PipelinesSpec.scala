@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import graft.functions.Pdfs
 import graft.ml.{AnalyticScorer, TreeEnsembleScorer}
+import graft.operators.{Domain, Integrate, Kde, KdeResult, Sources}
 import org.apache.spark.sql.functions._
 
 class PipelinesSpec extends SparkSpec {
@@ -28,16 +29,17 @@ class PipelinesSpec extends SparkSpec {
     assert(math.abs(r - expected) < 1e-12)
   }
 
+  private val analytic = AnalyticScorer(
+    df => col("y") * lit(0.9),              // biased surrogate
+    df => pow(col("x1"), 2) + lit(0.01))    // uncertainty high at edges
+
   test("active sampling: pool shrinks 3/iter, train grows, metrics finite") {
-    val scorer = AnalyticScorer(
-      df => col("y") * lit(0.9),              // biased surrogate
-      df => pow(col("x1"), 2) + lit(0.01))    // uncertainty high at edges
-    val cfg = ActiveSamplingConfig(initSize = 20, iterations = 3,
-      kdeGridSize = 128, checkpointEvery = 2)
-    val (train, metrics) = ActiveSampling.run(spark, grid, scorer, cfg)
-    assert(metrics.size == 3)
-    assert(metrics.last.trainSize == 20 + 3 * 3)
-    assert(metrics.last.poolSize == 400 - 20 - 9)
+    // 5 iterations, so the every-5th-iteration pool/train pin runs too
+    val cfg = ActiveSamplingConfig(initSize = 20, iterations = 5, kdeGridSize = 128)
+    val (train, metrics) = ActiveSampling.run(spark, grid, analytic, cfg)
+    assert(metrics.size == 5)
+    assert(metrics.map(_.trainSize) == (1 to 5).map(i => 20L + 3 * i))
+    assert(metrics.map(_.poolSize) == (1 to 5).map(i => 400L - 20 - 3 * i))
     metrics.foreach { m =>
       assert(!m.mse.isNaN && !m.meanVar.isNaN && !m.logPdfError.isNaN)
       assert(m.mse >= 0 && m.meanVar >= 0 && m.logPdfError >= 0)
@@ -49,13 +51,59 @@ class PipelinesSpec extends SparkSpec {
 
   test("active sampling with tree ensemble improves MSE over iterations") {
     val scorer = TreeEnsembleScorer(Seq("x1", "x2"), "y", n = 2, maxDepth = 6)
-    val cfg = ActiveSamplingConfig(initSize = 40, iterations = 4,
-      kdeGridSize = 128, checkpointEvery = 2)
+    val cfg = ActiveSamplingConfig(initSize = 40, iterations = 4, kdeGridSize = 128)
     val (_, metrics) = ActiveSampling.run(spark, grid, scorer, cfg)
     assert(metrics.size == 4)
     // weak monotonicity: last-iteration MSE no worse than 2x first
     assert(metrics.last.mse <= metrics.head.mse * 2.0,
       s"mse ${metrics.map(_.mse)}")
+  }
+
+  test("active sampling pins no copy of a pinned input") {
+    def pinned(): Map[Int, Long] = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val before = pinned()
+    val input = Sources.grid(spark, Domain(Seq((-1.0, 1.0), (-1.0, 1.0))), 60)
+      .withColumn("y", Pdfs.syntheticLabel(col("x1"), col("x2"))).localCheckpoint()
+    val withInput = pinned()
+    val inputBytes = withInput.filter { case (id, _) => !before.contains(id) }.values.sum
+    assert(inputBytes > 0)
+    ActiveSampling.run(spark, input, analytic,
+      ActiveSamplingConfig(initSize = 20, iterations = 0, kdeGridSize = 128))
+    val newBytes = pinned().filter { case (id, _) => !withInput.contains(id) }.values.sum
+    assert(newBytes < inputBytes / 2, s"run pinned $newBytes B over a $inputBytes B input")
+  }
+
+  /** The Spark formulation the driver-side log-pdf error replaced. */
+  private def sparkLogPdfError(trueKde: KdeResult, predKde: KdeResult): Double = {
+    val gridDf = trueKde.toDF(spark).withColumnRenamed("pdf", "p_true")
+      .withColumn("p_pred", predKde.interpolate(col("grid_x")))
+    val logDiff = gridDf.select(col("grid_x"),
+      abs(Pdfs.clipLower(log(greatest(col("p_pred"), lit(1e-300))), -6.0) -
+          Pdfs.clipLower(log(greatest(col("p_true"), lit(1e-300))), -6.0)).as("d"))
+      .filter(Pdfs.isFinite(col("d")))
+    Integrate.trapz(logDiff, col("grid_x"), col("d")).head().getDouble(0)
+  }
+
+  test("driver-side log-pdf error equals the Spark trapz formulation exactly") {
+    val trueKde = Kde.fit(grid, col("y"), gridSize = 256)
+    val scored = grid.withColumn("pred", col("y") * lit(0.9))
+    val bounds = Some((trueKde.gridMin, trueKde.gridMax))
+    // the -6 clip is active in the tails of both densities
+    val predKde = Kde.fit(scored, col("pred"), gridSize = 256, bounds = bounds)
+    assert(trueKde.pdf.count(_ < math.exp(-6.0)) > 10)
+    assert(predKde.pdf.count(_ < math.exp(-6.0)) > 10)
+    // a predicted density with a different bandwidth
+    val wideKde = Kde.fit(scored, col("pred"), gridSize = 256,
+      bandwidth = Some(trueKde.bandwidth * 2.5), bounds = bounds)
+    // NaN, +inf and zero entries: the non-finite points drop before pairing
+    val odd = KdeResult(-1.0, 1.0, 9, 0.5, Array(0.01, 0.2, Double.NaN, 0.5, 0.7,
+      0.5, Double.PositiveInfinity, 0.0, 1e-5))
+    for ((t, p) <- Seq(trueKde -> predKde, trueKde -> wideKde, odd -> predKde, trueKde -> odd)) {
+      val (got, want) = (ActiveSampling.logPdfError(t, p), sparkLogPdfError(t, p))
+      assert(got == want, s"driver $got vs spark $want")
+    }
+    assert(ActiveSampling.logPdfError(trueKde, predKde) > 0)
   }
 
   test("OU simulation: length, start value, determinism") {
